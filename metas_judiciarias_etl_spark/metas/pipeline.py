@@ -18,9 +18,8 @@ the execution design is Spark-native:
   lexicographic column order appear only in the sink projection (NP:232).
 
 At 100 TB: the header scan reads 2 lines per file (driver-side listing is
-the real cost — use a manifest/catalog instead of ls at that scale); the
-aggregation shuffles one row per (file, ~100 cols), i.e. output is tiny;
-everything downstream of the agg is effectively free.
+the real cost); the aggregation shuffles one row per (file, ~100 cols),
+i.e. output is tiny; everything downstream of the agg is effectively free.
 """
 
 from __future__ import annotations
@@ -51,64 +50,30 @@ def _parse_header(header_line: str) -> tuple[str, ...]:
     return tuple(h.strip() for h in next(csv.reader(io.StringIO(header_line))))
 
 
-def _bucket_entries(
-    entries: Iterable[tuple[str, str]],
-) -> dict[tuple[str, ...], list[str]]:
-    """(path, header_line) pairs → {header: [paths]} buckets, applying the
-    reference's skip rules (NP:157-159): blank header or missing identity
-    column → file excluded. (Header-only files need no special case under
-    Spark: zero data rows → zero rows in the union → no resumo group,
-    identical to the reference skipping the file.)"""
-    buckets: dict[tuple[str, ...], list[str]] = {}
-    for path, header_line in entries:
-        if not header_line:
-            continue
-        header = _parse_header(header_line)
-        if not set(C.IDENTITY_COLUMNS).issubset(header):
-            continue
-        buckets.setdefault(header, []).append(path)
-    return buckets
-
-
 def _scan_headers(input_dir: str) -> dict[tuple[str, ...], list[str]]:
     """Driver-side probe: first two lines of each *.csv → header buckets.
 
     Files are skipped (matching NP:157-159) when they are empty, have no
     data row (header-only → pandas df.empty), or lack an identity column.
-    Cost: O(2 lines) per file; at real scale pass ``manifest=`` to
-    ``read_court_csvs`` instead — a catalog row per file beats O(files)
-    object-store open() round-trips.
+    Cost: O(2 lines) per file.
     """
-
-    def entries():
-        for name in sorted(os.listdir(input_dir)):
-            if not name.endswith(".csv"):
-                continue
-            path = os.path.join(input_dir, name)
-            if not os.path.isfile(path):
-                # e.g. a Spark CSV sink directory named *.csv
-                continue
-            with open(path, encoding="utf-8", newline="") as fh:
-                header_line = fh.readline().strip("\r\n")
-                has_data = bool(fh.readline())
-            if has_data:
-                yield path, header_line
-
-    return _bucket_entries(entries())
-
-
-def load_manifest(source: str | Iterable[tuple[str, str]]) -> list[tuple[str, str]]:
-    """Normalize a file manifest to [(path, header_line)].
-
-    ``source`` is either an iterable of (path, header_line) pairs or a path
-    to a manifest CSV with columns ``path,header`` (header = the data
-    file's raw first line, CSV-quoted as needed). This is the 100 TB
-    listing path: one catalog read replaces per-file opens."""
-    if isinstance(source, str):
-        with open(source, encoding="utf-8", newline="") as fh:
-            rows = csv.DictReader(fh)
-            return [(r["path"], r["header"]) for r in rows]
-    return list(source)
+    buckets: dict[tuple[str, ...], list[str]] = {}
+    for name in sorted(os.listdir(input_dir)):
+        if not name.endswith(".csv"):
+            continue
+        path = os.path.join(input_dir, name)
+        if not os.path.isfile(path):
+            # e.g. a Spark CSV sink directory named *.csv
+            continue
+        with open(path, encoding="utf-8", newline="") as fh:
+            header_line = fh.readline().strip("\r\n")
+            has_data = bool(fh.readline())
+        if not (has_data and header_line):
+            continue
+        header = _parse_header(header_line)
+        if set(C.IDENTITY_COLUMNS).issubset(header):
+            buckets.setdefault(header, []).append(path)
+    return buckets
 
 
 def _bucket_schema(header: tuple[str, ...], typed: bool = True) -> T.StructType:
@@ -131,7 +96,6 @@ def read_court_csvs(
     spark: SparkSession,
     input_dir: str,
     typed: bool = True,
-    manifest: str | Iterable[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """Read every valid court CSV under ``input_dir`` into one DataFrame
     with by-name schema alignment and a file-lineage column.
@@ -141,16 +105,8 @@ def read_court_csvs(
     NP:155), but values pass through byte-verbatim — the right mode for
     the Consolidado sink, which re-emits input cells without arithmetic
     (the reference applies no dtype there either; double-parsing would
-    only rewrite '40' as '40.0' and pay parse + format for nothing).
-
-    ``manifest`` replaces the driver-side per-file header probe with a
-    precomputed ``(path, header_line)`` listing (see ``load_manifest``) —
-    the scale path: one catalog scan instead of O(files) opens."""
-    buckets = (
-        _bucket_entries(load_manifest(manifest))
-        if manifest is not None
-        else _scan_headers(input_dir)
-    )
+    only rewrite '40' as '40.0' and pay parse + format for nothing)."""
+    buckets = _scan_headers(input_dir)
     if not buckets:
         raise FileNotFoundError(f"no valid court CSVs in {input_dir}")
     parts = []
@@ -321,29 +277,6 @@ def compute_resumo(court_data: DataFrame) -> DataFrame:
     return computed.selectExpr(*final)
 
 
-def resumo_from_untyped(data: DataFrame) -> DataFrame:
-    """Compute the resumo from an UNTYPED (all-string) court scan by
-    try_cast-projecting the counter columns to double.
-
-    This is the shared-scan path: one string-typed CSV parse feeds both the
-    byte-verbatim Consolidado sink and (through this projection) the metas
-    aggregation, instead of two full parses of the corpus. Semantics vs the
-    typed read: a field-count-malformed row still drops at parse time; a
-    non-numeric CELL becomes NULL here (cell-level coercion, the
-    reference's pd.to_numeric(errors='coerce') posture, C3) where the
-    typed DROPMALFORMED read would drop the whole row. The reference never
-    exercises that case (its corpus is numerically clean); both postures
-    are documented, this one matches pandas more closely."""
-    numeric = [c for c in C.all_numeric_columns() if c in data.columns]
-    projected = data.select(
-        FILE_COL,
-        "sigla_tribunal",
-        "ramo_justica",
-        *[F.col(c).try_cast("double").alias(c) for c in numeric],
-    )
-    return compute_resumo(projected)
-
-
 def stringify_resumo(resumo: DataFrame, sentinel: str = "NA") -> DataFrame:
     """Sink projection (NP:229-242): every cell stringified, NULL → 'NA',
     columns in the reference's lexicographic-block order."""
@@ -356,110 +289,11 @@ def stringify_resumo(resumo: DataFrame, sentinel: str = "NA") -> DataFrame:
     )
 
 
-def _quote_nonnumeric_lines(df: DataFrame) -> DataFrame:
-    """Render each row as the exact ``csv.QUOTE_NONNUMERIC`` byte string
-    pandas emits (Versao_P.py:121-125): numeric cells unquoted through
-    ``str()`` (shortest-round-trip float repr — Spark's JVM cast prints
-    Java sci-notation instead, e.g. ``1.0E20`` vs ``1e+20``, so the
-    formatting must happen Python-side), everything else quoted with
-    internal quotes DOUBLED (Spark's quoteAll would backslash-escape),
-    NULL → ``""``. Arrow-batched ``mapInPandas`` routing every row through
-    the same stdlib csv writer the reference used — parity by
-    construction. This is the P variant's per-court temp STAGING sink
-    (one small file per court), not a hot path; the quoteAll fast path in
-    ``write_csv`` remains the default for stringified frames."""
-    numeric = {
-        f.name
-        for f in df.schema.fields
-        if isinstance(
-            f.dataType,
-            (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-             T.FloatType, T.DoubleType, T.DecimalType),
-        )
-    }
-    cols = list(df.columns)
-
-    def fmt(batches):
-        import csv as _csv
-        import io as _io
-
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            lines = []
-            for row in pdf.itertuples(index=False, name=None):
-                vals: list = []
-                for name, v in zip(cols, row):
-                    if v is None or (isinstance(v, float) and v != v) or pd.isna(v):
-                        vals.append("")  # NULL → "" (quoted empty, like pandas)
-                    elif name in numeric:
-                        # python float/int so the csv module leaves it
-                        # unquoted and str()s it exactly like pandas.
-                        # Arrow batches hand us numpy scalars, for which
-                        # isinstance(np.int64(5), int) is False — check
-                        # np.integer too or int columns print as '5.0'.
-                        vals.append(
-                            int(v)
-                            if isinstance(v, (int, np.integer))
-                            and not isinstance(v, (bool, np.bool_))
-                            else float(v)
-                        )
-                    else:
-                        vals.append(str(v))
-                buf = _io.StringIO()
-                _csv.writer(
-                    buf, delimiter=";", quoting=_csv.QUOTE_NONNUMERIC,
-                    lineterminator="",
-                ).writerow(vals)
-                lines.append(buf.getvalue())
-            yield pd.DataFrame({"line": lines})
-
-    return df.mapInPandas(fmt, schema="line string")
-
-
-def write_csv(
-    df: DataFrame,
-    path: str,
-    single_file: bool = True,
-    quote_nonnumeric: bool = False,
-) -> None:
+def write_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
     """`;`-separated CSV sink (NP:100-102). ``single_file`` coalesces to one
-    part for byte-level parity with the reference; leave False at scale.
-
-    ``quote_nonnumeric`` reproduces the P variant's csv.QUOTE_NONNUMERIC
-    staging format (P:121-125). For an all-string frame (the stringified
-    resumo) QUOTE_NONNUMERIC degenerates to quote-everything — Spark's
-    ``quoteAll`` — so the JVM writer suffices. For a TYPED frame (the
-    reference stages the typed per-court frame) the exact semantics —
-    quote only non-numeric cells, ``str()`` float formatting, doubled
-    quotes, NULL → ``""`` — are produced by ``_quote_nonnumeric_lines``
-    and written as text, byte-identical to ``pandas.to_csv(quoting=
-    csv.QUOTE_NONNUMERIC)``."""
-    from pyspark.sql import types as _T
-
-    if quote_nonnumeric and any(
-        not isinstance(f.dataType, _T.StringType) for f in df.schema.fields
-    ):
-        # This typed-exact path is ALWAYS single-file: it reproduces the
-        # reference's per-court temp staging sink (P:121-125), one small
-        # CSV per court — a header line must precede the body, which only
-        # a 1-partition text write can guarantee. ``single_file`` is
-        # intentionally ignored here; the scale path is the quoteAll
-        # branch below over a stringified frame.
-        header_line = ";".join('"%s"' % c.replace('"', '""') for c in df.columns)
-        lines = _quote_nonnumeric_lines(df)
-        header_df = df.sparkSession.createDataFrame([(header_line,)], "line string")
-        # Union partition order puts the 1-partition header frame first.
-        header_df.unionAll(lines.coalesce(1)).coalesce(1).write.mode(
-            "overwrite"
-        ).text(path)
-        return
+    part for byte-level parity with the reference; leave False at scale."""
     out = df.coalesce(1) if single_file else df
-    opts = {"header": True, "sep": ";"}
-    if quote_nonnumeric:
-        opts["quoteAll"] = True
-    out.write.options(**opts).mode("overwrite").csv(path)
+    out.write.options(header=True, sep=";").mode("overwrite").csv(path)
 
 
 def meta1_debug_trace(
@@ -560,31 +394,17 @@ def run(
     spark: SparkSession,
     input_dir: str,
     output_dir: str | None = None,
-    shared_scan: bool = False,
     debug_court: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """End-to-end: read court CSVs → (ResumoMetas, Consolidado).
 
     Returns (stringified resumo, consolidated union); writes both as
-    `;`-CSV when ``output_dir`` is given (NP:224-243).
-
-    ``shared_scan=True``: ONE untyped parse feeds both outputs — the
-    Consolidado re-emits the strings verbatim and the resumo casts its
-    counter columns (``resumo_from_untyped``), persisted across the two
-    sink actions. MEASURED SLOWER at reference scale (9.3 s vs 6.0 s
-    best-of-2 interleaved, scripts/bench_metas_corpus.py): materializing
-    ~1 GB of cached strings costs more than a second 32-thread parse, so
-    two independent scans stay the default. The option remains for
-    deployments where the input re-read is the expensive part (cold
-    object store, pay-per-scan)."""
-    if shared_scan:
-        data = read_court_csvs(spark, input_dir, typed=False).persist()
-        resumo = stringify_resumo(resumo_from_untyped(data))
-        consolidado = data.drop(FILE_COL)
-    else:
-        data = read_court_csvs(spark, input_dir)
-        resumo = stringify_resumo(compute_resumo(data))
-        consolidado = read_court_csvs(spark, input_dir, typed=False).drop(FILE_COL)
+    `;`-CSV when ``output_dir`` is given (NP:224-243). The two outputs read
+    the corpus independently: a typed scan feeds the resumo aggregation, an
+    all-string scan re-emits the Consolidado cells verbatim."""
+    data = read_court_csvs(spark, input_dir)
+    resumo = stringify_resumo(compute_resumo(data))
+    consolidado = read_court_csvs(spark, input_dir, typed=False).drop(FILE_COL)
     if debug_court is not None:
         # O4 (NP:147): per-court Meta-1 trace, logged before the sinks run.
         # Probe the debugged file's own header (1 line, 1 file) so the NA
@@ -600,6 +420,4 @@ def run(
     if output_dir:
         write_csv(resumo, os.path.join(output_dir, "ResumoMetas.csv"))
         write_csv(consolidado, os.path.join(output_dir, "Consolidado.csv"))
-        if shared_scan:
-            data.unpersist()
     return resumo, consolidado

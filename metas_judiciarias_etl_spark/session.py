@@ -20,8 +20,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def build_session(
     app_name: str = "metas-judiciarias-etl-spark",
@@ -32,9 +30,11 @@ def build_session(
     """Create (or fetch) a SparkSession with the engine's defaults.
 
     On a cluster, ``master`` is normally left to spark-submit; locally we
-    default to ``local[$SPARK_GRAFT_CPUS]``.
+    default to ``local[$SPARK_GRAFT_CPUS]``, or to the number of cores this
+    process may run on when the variable is unset. The same count is the
+    default shuffle partition count.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
@@ -44,7 +44,7 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         # Files: pack many small files per task (the reference corpus is 90
         # files, median 2.2 MB) but cap split size so one 118 MB file still

@@ -100,10 +100,7 @@ def _scan_fanout(spark: SparkSession, path: str) -> int:
     and add no exchange (the production / 100 TB path). Only when the scan
     would otherwise run on fewer cores than the session has (here: tiny
     single-row-group fixtures) do we fan out to the session's parallelism.
-    Unknown sizes return 0. ``SPARK_GRAFT_SCAN_FANOUT=0`` disables the
-    fan-out (A/B instrumentation; production clusters can also set it)."""
-    if os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "1") == "0":
-        return 0
+    Unknown sizes return 0."""
     size = _input_bytes(path)
     if size <= 0:
         return 0

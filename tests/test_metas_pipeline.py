@@ -160,41 +160,6 @@ def test_quoted_header_with_comma(spark, tmp_path):
     assert row["meta1"] == round(50 / 50 * 100, 2)
 
 
-def test_manifest_listing_equivalence(spark, corpus):
-    """manifest= replaces the driver-side header probe; a manifest built
-    from the same drifted-schema corpus must yield the identical resumo."""
-    import csv as _csv
-
-    entries = []
-    for name in sorted(os.listdir(corpus)):
-        p = os.path.join(corpus, name)
-        if not (name.endswith(".csv") and os.path.isfile(p)):
-            continue
-        with open(p, encoding="utf-8", newline="") as fh:
-            entries.append((p, fh.readline().strip("\r\n")))
-    via_scan = compute_resumo(read_court_csvs(spark, corpus))
-    via_manifest = compute_resumo(
-        read_court_csvs(spark, corpus, manifest=entries)
-    )
-    assert sorted(map(tuple, via_scan.collect())) == sorted(
-        map(tuple, via_manifest.collect())
-    )
-    # and the CSV-file form of the manifest
-    import tempfile
-
-    with tempfile.NamedTemporaryFile(
-        "w", suffix=".csv", delete=False, newline=""
-    ) as fh:
-        w = _csv.writer(fh)
-        w.writerow(["path", "header"])
-        w.writerows(entries)
-        mf = fh.name
-    via_file = compute_resumo(read_court_csvs(spark, corpus, manifest=mf))
-    assert sorted(map(tuple, via_scan.collect())) == sorted(
-        map(tuple, via_file.collect())
-    )
-
-
 def test_end_to_end_sinks(spark, corpus, tmp_path):
     out_dir = str(tmp_path / "resultados")
     resumo, consolidado = run(spark, corpus, out_dir)
@@ -206,19 +171,6 @@ def test_end_to_end_sinks(spark, corpus, tmp_path):
     back = pd.read_csv(resumo_files[0], sep=";")
     assert len(back) == 8
     assert list(back.columns)[:3] == ["sigla_tribunal", "ramo_justica", "meta1"]
-
-
-def test_shared_scan_resumo_equivalence(spark, corpus):
-    """The shared-scan path (one untyped parse + try_cast projection) must
-    produce the identical resumo as the typed read on the full fixture
-    corpus — including the malformed-row drop and all-NaN guards."""
-    from metas_judiciarias_etl_spark.metas.pipeline import resumo_from_untyped
-
-    typed = compute_resumo(read_court_csvs(spark, corpus))
-    shared = resumo_from_untyped(read_court_csvs(spark, corpus, typed=False))
-    assert sorted(map(tuple, typed.collect())) == sorted(
-        map(tuple, shared.collect())
-    )
 
 
 def test_chart_render_png(spark, corpus, tmp_path):

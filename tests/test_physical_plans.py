@@ -763,7 +763,8 @@ def test_embedding_moments_are_partial_aggregatable(spark, sf, name):
         # an in-row posexplode assembly, and iteration k must not replay
         # iterations 1..k-1) — so the residual plan reads checkpointed
         # partitions instead of carrying the 700+-Exchange lineage
-        # (plans/r08/emb_pca_top_component_{before,after}.txt: 724 -> 0).
+        # (git show 36a4832:plans/r08/emb_pca_top_component_{before,after}.txt:
+        # 724 -> 0).
         # The moment aggregations themselves are covered by the two
         # uncheckpointed family members above.
         assert "Scan ExistingRDD" in plan
@@ -829,7 +830,8 @@ def test_hits_normalizers_broadcast(spark, sf):
     # branch (11.3 s bench tail). The normalizer broadcasts now execute
     # inside the per-round build jobs, so the residual plan must read
     # checkpointed partitions instead of carrying the iteration lineage
-    # (plans/r08/graph_hits_scores_{before,after}.txt: 484 Exchange -> 0)
+    # (git show 36a4832:plans/r08/graph_hits_scores_{before,after}.txt:
+    # 484 Exchange -> 0)
     # and stay free of cartesian expansion.
     assert "Scan ExistingRDD" in plan
     assert "Exchange" not in plan  # lineage truncated, nothing replayed
