@@ -417,8 +417,7 @@ def main() -> None:
     # Also persist the full record to a file: the driver's stdout capture
     # truncates long tails, which cost round 3 the per-query map for ~80 of
     # 127 queries. Default target is the UNTRACKED bench_out/ dir so a bench
-    # run never dirties the committed artifact (ADVICE r4); copy into the
-    # repo root explicitly when recording a round.
+    # run never dirties the tree (ADVICE r4).
     out = os.environ.get("SPARK_GRAFT_BENCH_OUT")
     if out is None:
         out_dir = os.path.join(
