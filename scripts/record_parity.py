@@ -1,4 +1,4 @@
-"""Record a full-registry parity artifact (PARITY_r{N}.json).
+"""Record a full-registry parity artifact (``.perfbench/PARITY.json``).
 
 The driver's CORRECTNESS gate samples ~50 queries per round, so most of the
 registry never gets a machine-readable per-round verdict. This script runs
@@ -14,8 +14,8 @@ rows-only record: ``{"rows_only": true, "spark_rows": N, "err": ...}``.
 
 Usage::
 
-    python scripts/record_parity.py [--out PARITY_r06.json] [--sf /root/testdata/sf0.01]
-    python scripts/record_parity.py --jobs 4 --out PARITY_r06.json   # sharded
+    python scripts/record_parity.py [--out .perfbench/PARITY.json] [--sf <sf0.01 dir>]
+    python scripts/record_parity.py --jobs 4   # sharded
 
 ``--jobs N`` shards the registry by query-name hash across N child
 processes (each with its own SparkSession/DuckDB) and merges their partial
@@ -34,8 +34,9 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tests"))
 
 
 def _shard_of(name: str, n: int) -> int:
@@ -88,9 +89,11 @@ def _run_jobs(args) -> int:
     return 1 if meta["n_fail"] else rc
 
 
-def main() -> int:
+def _args(argv: list[str] | None = None) -> argparse.Namespace:
+    """Parse the command line and create the directory ``--out`` goes to."""
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="PARITY_r06.json")
+    ap.add_argument("--out", default=os.path.join(ROOT, ".perfbench", "PARITY.json"),
+                    help="artifact path; the default is git-ignored")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_ORACLE", "/root/testdata/sf0.01"))
     ap.add_argument("--only", default=None, help="comma-separated subset of query names")
     ap.add_argument("--jobs", type=int, default=1,
@@ -102,7 +105,13 @@ def main() -> int:
                     "the artifact twice at different layouts to prove no "
                     "query's hash depends on the shuffle plan (VERDICT r5 "
                     "item 8)")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
+    os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
+    return args
+
+
+def main() -> int:
+    args = _args()
     if args.jobs > 1:
         return _run_jobs(args)
 
